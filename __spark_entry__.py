@@ -720,8 +720,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def crawl_epoch_scoped(spark, sf):
         """Wide-epoch crawl with every 10^10-scale storage path FORCED
         from birth: partitioned bloom sidecar (scoped per-epoch
-        commits), bucketed urls_seen + pruned seen reads
-        (seen_bucket_min_bytes=0). The final seen SET must equal the
+        commits), bucketed urls_seen + pruned seen reads and bucketed
+        item sinks (bucket_min_bytes=0). The final seen SET must equal the
         default-path crawl's — the driver-verified witness that the
         scale layouts change plans, never results."""
         import tempfile
@@ -735,8 +735,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         docs = documents_df(spark, fixture_site())
         cfg = CrawlConfig(FIXTURE_START_DOMAIN, follow_links=True,
                           sequential=False, per_host_budget=4,
-                          politeness_sec=0, seen_bucket_min_bytes=0)
+                          politeness_sec=0)
         cat = Catalog(spark, tempfile.mkdtemp(prefix="entryscoped-"))
+        cat.bucket_min_bytes = 0
         eng = CrawlEngine(spark, cat, cfg, docs, expected_urls=4096,
                           bloom_mode="partitioned")
         eng.seed([FIXTURE_SEED])

@@ -118,20 +118,6 @@ class CrawlConfig:
     # anti-join scans only touched buckets (O(epoch activity), not
     # O(table)); production = 256+ so per-bucket data stays bounded
     n_item_buckets: int = 8
-    # item tables smaller than this stay in plain appended files (one
-    # anti-join job, no bucket bookkeeping); the first MERGE after
-    # crossing pays one consolidating rewrite into buckets, then every
-    # epoch is bucket-pruned. None = env SPARK_GRAFT_BUCKET_MIN_BYTES
-    # or 256 MiB.
-    item_bucket_min_bytes: int | None = None
-    # urls_seen smaller than this stays in plain appended files; on
-    # crossing it converts (one rewrite) to host-bucket dirs, after
-    # which each epoch (a) appends only per-bucket files and (b) reads
-    # only the buckets the active frontier touches for the exact seen
-    # anti-join — the last O(table)-per-epoch scan in the crawl loop
-    # becomes O(active buckets). None = env SPARK_GRAFT_BUCKET_MIN_BYTES
-    # or 256 MiB (same default as the item sinks).
-    seen_bucket_min_bytes: int | None = None
     # Epoch frames derived from the due set (due, fetched, followed)
     # get an explicit F.broadcast hint only while their known row
     # count is at or below this; above it the join is left to the

@@ -647,7 +647,7 @@ class CrawlEngine:
             # the pool's other jobs can't race the snapshot id.
             self.cat.append_bucketed(
                 "urls_seen", seen_batch, self._seen_bucket_expr(),
-                self._seen_bucket_spec(), cfg.seen_bucket_min_bytes,
+                self._seen_bucket_spec(),
             )
             snap = self.cat.head("urls_seen")
             due_b = due.groupBy("host_bucket").agg(F.count("*").alias("urls_due"))
@@ -692,7 +692,6 @@ class CrawlEngine:
                     self.cat.merge_insert, tbl, batch, keys, schema, order,
                     _item_bucket(keys),
                     {"n_item_buckets": cfg.n_item_buckets},
-                    cfg.item_bucket_min_bytes,
                 )
                 for tbl, batch, keys, schema, order in sink_tasks
             ]

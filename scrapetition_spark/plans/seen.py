@@ -87,34 +87,38 @@ class BloomFilter:
     def build_from(self, df: DataFrame, url_col: str = "url") -> "BloomFilter":
         """Fold df[url_col] into a new filter. Per-partition bitsets
         are built in an Arrow kernel and OR-merged on the driver
-        (bitset size is the broadcast budget: m/8 bytes)."""
+        (bitset size is the broadcast budget: m/8 bytes). The kernel
+        also counts the keys it folds: ``n_keys`` is what tells
+        ``unseen`` the filter is worth probing."""
         m_bits, k = self.m_bits, self.k
         # constant fold-fanout: one bitset per fold partition crosses
         # the driver regardless of cluster width (at 32+ cores the
         # per-partition bitsets would otherwise dominate epoch cost)
         hashed = df.select(F.xxhash64(F.col(url_col)).alias(_HASH_COL)).coalesce(8)
-        out_schema = StructType([StructField("bits", BinaryType())])
+        out_schema = StructType(
+            [StructField("bits", BinaryType()), StructField("n_keys", LongType())]
+        )
 
         def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             local = np.zeros(m_bits // 8, dtype=np.uint8)
-            any_rows = False
+            n_keys = 0
             for b in batches:
                 if len(b) == 0:
                     continue
-                any_rows = True
+                n_keys += len(b)
                 h = b[_HASH_COL].to_numpy(dtype=np.int64)
                 for pos in _positions(h, m_bits, k):
                     np.bitwise_or.at(local, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
-            if any_rows:
-                yield pd.DataFrame({"bits": [local.tobytes()]})
+            if n_keys:
+                yield pd.DataFrame({"bits": [local.tobytes()], "n_keys": [n_keys]})
 
         parts = hashed.mapInPandas(fold, out_schema).collect()
         merged = self.bits.copy()
-        n = 0
+        n_keys = self.n_keys
         for row in parts:
             merged |= np.frombuffer(row["bits"], dtype=np.uint8)
-            n += 1
-        return BloomFilter(merged, m_bits, k, self.n_keys)
+            n_keys += row["n_keys"]
+        return BloomFilter(merged, m_bits, k, n_keys)
 
     # ---- vectorized probe ---------------------------------------------------
 

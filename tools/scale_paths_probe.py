@@ -98,6 +98,7 @@ def probe_sidecar(spark, expected_keys: int, epochs: int = 4) -> dict:
 def probe_seen(spark, seen_rows: int, epochs: int = 3) -> dict:
     n_buckets = 256
     cat = Catalog(spark, tempfile.mkdtemp(prefix="seenprobe-"))
+    cat.bucket_min_bytes = 0  # bucketed from birth
     seen = urls_frame(spark, 0, seen_rows, 4000, n_buckets).select(
         "url", "host",
         F.lit(0).cast("long").alias("fetch_seq"),
@@ -106,7 +107,7 @@ def probe_seen(spark, seen_rows: int, epochs: int = 3) -> dict:
         F.lit(None).cast("string").alias("encoding"),
     )
     bucket = F.pmod(F.xxhash64("host"), F.lit(n_buckets)).cast("int")
-    cat.append_bucketed("urls_seen", seen, bucket, {"n": n_buckets}, 0)
+    cat.append_bucketed("urls_seen", seen, bucket, {"n": n_buckets})
     table_bytes = cat.table_bytes("urls_seen")
 
     # candidates: 500k frontier rows on 16 hosts (≤16 buckets), half
